@@ -8,7 +8,9 @@ reference's pandas/psycopg row-at-a-time execution.
 Package map
 -----------
 - ``session``    SparkSession builder (AQE, UTC, arrow)
-- ``sources``    parquet/CSV sources with explicit schemas (SURVEY §2.1)
+- ``sources``    CSV sources with explicit schemas; Parquet tables whose
+                 schema is inferred once per process and memoized, keyed on
+                 file identity and the type-mapping confs (SURVEY §2.1)
 - ``functions``  scalar/aggregate Column helpers (SURVEY §2.8), exact-numeric
                  aggregation used to keep results bit-identical to the oracle
 - ``operators``  the query/operator inventory (SURVEY §2) + LLM-pipeline

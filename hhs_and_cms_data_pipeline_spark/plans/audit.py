@@ -38,6 +38,19 @@ def count_exchanges(plan: str) -> int:
     return len(re.findall(r"\(\d+\) Exchange\b", plan))
 
 
+def exchange_origins(plan: str) -> list[str]:
+    """Shuffle origin (ENSURE_REQUIREMENTS, REPARTITION_BY_NUM, ...) of each
+    Exchange node in the operator-tree section, read from that node's
+    ``Arguments`` line in the detail section."""
+    tree, _, details = plan.partition("\n\n")
+    args = dict(
+        re.findall(r"^\((\d+)\) Exchange\n(?:.+\n)*?Arguments: (.*)$", details, re.M)
+    )
+    origin = re.compile(r"\b(ENSURE_REQUIREMENTS|REPARTITION_BY_\w+|REBALANCE_\w+)\b")
+    ids = re.findall(r"\bExchange \((\d+)\)", tree)
+    return [origin.search(args[i]).group(1) for i in ids]
+
+
 def count_data_shuffles(plan: str) -> int:
     """Exchanges that move data BY KEY (hash/range) — excludes the deliberate
     round-robin rebalance `sources.spread` adds for single-file inputs."""

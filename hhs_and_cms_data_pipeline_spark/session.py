@@ -34,8 +34,19 @@ _SESSION_CONF = {
 }
 
 
+def env_positive_int(name: str) -> int | None:
+    """Positive-integer environment knob, None when unset or empty. Any other
+    value raises a ValueError naming the variable and its value."""
+    raw = os.environ.get(name, "").strip()
+    if not raw:
+        return None
+    if not raw.isdecimal() or int(raw) < 1:
+        raise ValueError(f"${name} must be a positive integer, got {raw!r}")
+    return int(raw)
+
+
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+    return env_positive_int("SPARK_GRAFT_CPUS") or os.cpu_count() or 8
 
 
 def get_spark(app_name: str = "hhs-cms-spark-engine") -> SparkSession:

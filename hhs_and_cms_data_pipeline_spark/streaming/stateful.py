@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..session import env_positive_int
 from ..sources.tables import normalize_events_ts
 from .events import events_raw_schema
 
@@ -46,12 +47,9 @@ def stream_state_partitions(spark: SparkSession) -> int:
     the pandas fold serializes); rows bit-identical across all three. On
     a production cluster, override with $SPARK_GRAFT_STREAM_STATE_PARTITIONS
     sized so each partition holds ~100MB-1GB of state."""
-    import os as _os
-
-    env = _os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    if env:
-        return max(1, int(env))
-    return max(8, spark.sparkContext.defaultParallelism // 4)
+    return env_positive_int("SPARK_GRAFT_STREAM_STATE_PARTITIONS") or max(
+        8, spark.sparkContext.defaultParallelism // 4
+    )
 
 
 _GAP_US = 30 * 60 * 1_000_000  # 30 min in us; ts travels as int64 MICROS

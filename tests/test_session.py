@@ -459,3 +459,22 @@ def test_helper_edit_promotes_consumer_fingerprint(tmp_path):
     assert fp1 != fp2, "helper-body edit must change the consumer fingerprint"
     assert fp1 != fp3, "module-constant edit must change the consumer fingerprint"
 
+
+def test_bad_cpus_env_names_variable(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "eight")
+    with pytest.raises(ValueError, match=r"SPARK_GRAFT_CPUS.*'eight'"):
+        S.default_parallelism()
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert S.default_parallelism() == 3
+
+
+def test_bad_stream_state_partitions_env_names_variable(spark, monkeypatch):
+    from hhs_and_cms_data_pipeline_spark.streaming.stateful import (
+        stream_state_partitions,
+    )
+
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "0x10")
+    with pytest.raises(ValueError, match=r"SPARK_GRAFT_STREAM_STATE_PARTITIONS.*'0x10'"):
+        stream_state_partitions(spark)
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "5")
+    assert stream_state_partitions(spark) == 5
