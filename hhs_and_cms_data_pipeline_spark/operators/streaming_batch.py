@@ -13,36 +13,25 @@ from pyspark.sql import functions as F
 from ..functions.exact import dsum, floordiv, sql_dsum, sql_floordiv
 from .ingest_queries import _DRIFT_SCALE, _DRIFT_SPLIT
 from ..registry import register
-from ..session import ensure_session_conf
+from ..session import ensure_session_conf, scoped_conf
 from ..sources import table
 
-def _run_drain(spark: SparkSession, start):
-    """Start and fully drain a bounded availableNow stream under the
-    streaming-specific partition count (streaming.stateful
-    .stream_state_partitions — rationale and the ST4 state-store A/B
-    there). For these foreachBatch drains the lever is the per-micro-batch
-    JOB width: every batch schedules scan/agg/merge stages at the session's
-    shuffle.partitions even though each batch carries KB-MB of data, so
-    the fixed per-task cost dominates (guide §2.5). Interleaved A/B at
-    sf0.1, whole builder timed, 5v5 both orders: drift median 4.19s →
-    3.89s, cms 4.28s → 4.02s (consistent medians, overlapping spreads —
-    a fixed-overhead trim, not an algorithmic change). Env-scaled via
-    $SPARK_GRAFT_STREAM_STATE_PARTITIONS on a real cluster; the conf is
-    set/restored around start()..awaitTermination only, so the readout
-    (which may scan the corpus, e.g. ST18's truth audit) keeps the
+def _run_drain(spark: SparkSession, stage_dir: str, start):
+    """Start and fully drain a bounded availableNow stream over the files in
+    ``stage_dir`` at ``streaming.stateful.drain_partitions`` (rationale and
+    per-batch-bytes matrix there). For these foreachBatch drains the lever
+    is the per-micro-batch JOB width: every batch schedules scan/agg/merge
+    stages at the session's shuffle.partitions even though each batch
+    carries KB-MB of data, so the fixed per-task cost dominates (guide
+    §2.5). The conf is scoped to start()..awaitTermination only, so the
+    readout (which may scan the corpus, e.g. ST18's truth audit) keeps the
     session's full parallelism."""
-    from ..streaming.stateful import stream_state_partitions
+    from ..streaming.stateful import drain_conf
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(stream_state_partitions(spark))
-    )
-    try:
+    with scoped_conf(spark, drain_conf(spark, stage_dir)):
         q = start()
         q.awaitTermination()
         return q
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 # --------------------------------------------------------------------------
@@ -891,7 +880,7 @@ def stream_snapshot_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         .format("parquet")
         .load(stage)
     )
-    _run_drain(spark, lambda: stream_snapshot_sink(
+    _run_drain(spark, stage, lambda: stream_snapshot_sink(
         tumbling_counts(normalize_events_ts(raw)),
         target,
         ckpt,
@@ -1283,7 +1272,7 @@ def stream_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _merge = make_rollup_merger(target, run_id=ckpt)  # ST14 merge body (factory above)
 
-    q = _run_drain(spark, lambda: (
+    q = _run_drain(spark, stage, lambda: (
         raw.writeStream.foreachBatch(_merge)
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
@@ -1738,7 +1727,7 @@ def stream_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .format("parquet")
         .load(stage)
     )
-    q = _run_drain(spark, lambda: (
+    q = _run_drain(spark, stage, lambda: (
         raw.writeStream.foreachBatch(make_hll_merger(target))
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
@@ -1908,7 +1897,7 @@ def stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         .format("parquet")
         .load(stage)
     )
-    q = _run_drain(spark, lambda: (
+    q = _run_drain(spark, stage, lambda: (
         normalize_events_ts(raw)
         .writeStream.foreachBatch(make_drift_merger(target, run_id=ckpt))
         .option("checkpointLocation", ckpt)
@@ -2023,7 +2012,7 @@ def stream_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .format("parquet")
         .load(stage)
     )
-    q = _run_drain(spark, lambda: (
+    q = _run_drain(spark, stage, lambda: (
         raw.writeStream.foreachBatch(make_cms_merger(target, run_id=ckpt))
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
@@ -2331,7 +2320,7 @@ def stream_manifest_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("event_type").isNotNull())
         .select("event_id", "user_id", "event_type", "value")
     )
-    q = _run_drain(spark, lambda: (
+    q = _run_drain(spark, stage, lambda: (
         manifest_stream_writer(
             raw, target, audit_column="value", checkpointLocation=ckpt
         )
@@ -2470,7 +2459,7 @@ def stream_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         .format("parquet")
         .load(stage)
     )
-    q = _run_drain(spark, lambda: (
+    q = _run_drain(spark, stage, lambda: (
         raw.writeStream.foreachBatch(make_daily_count_merger(target, run_id=ckpt))
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)

@@ -14,6 +14,8 @@ Scale notes (100 TB design; tested on local[32]):
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -47,6 +49,32 @@ def env_positive_int(name: str) -> int | None:
 
 def default_parallelism() -> int:
     return env_positive_int("SPARK_GRAFT_CPUS") or os.cpu_count() or 8
+
+
+@contextmanager
+def scoped_conf(
+    spark: SparkSession, confs: Mapping[str, str | None]
+) -> Iterator[None]:
+    """Apply runtime ``confs`` for the duration of a ``with`` block, then put
+    back each key's prior value on every exit path, unsetting a key that had
+    none. A ``None`` value unsets the key inside the block. The confs are set
+    inside the ``try``, so an error while setting them, or anywhere in the
+    block, still restores the shared session."""
+    prior: dict[str, str | None] = {}
+    try:
+        for key, value in confs.items():
+            prior[key] = spark.conf.get(key, None)
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
+        yield
+    finally:
+        for key, value in reversed(prior.items()):
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
 
 
 def get_spark(app_name: str = "hhs-cms-spark-engine") -> SparkSession:

@@ -83,43 +83,26 @@ def run_profile_maintenance(spark, stage_dir: str, checkpoint_dir: str, query_na
     from ..sources.tables import normalize_events_ts
     from .events import events_raw_schema
 
-    # transformWithState keeps each state variable in its own COLUMN
-    # FAMILY; the default HDFSBackedStateStoreProvider rejects multiple
-    # families outright, so the RocksDB provider (bundled rocksdbjni) is a
-    # REQUIREMENT of this operator, not a tuning choice — it is also the
-    # provider a 100 TB deployment runs for state larger than executor
-    # heap. Runtime-settable; restored after the drain so co-resident
-    # applyInPandasWithState queries keep their session's provider.
-    _PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
-    prior_provider = spark.conf.get(_PROVIDER_KEY, None)
-    spark.conf.set(
-        _PROVIDER_KEY,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    # streaming-specific state-partition count (stateful.stream_state_partitions
-    # docstring: per-batch state-store commit fan-out is per-partition; A/B'd
-    # on ST4 at sf0.1 — 32 parts 6.1-6.9s, 8 parts 5.8-6.4s, rows identical)
-    from .stateful import stream_state_partitions
+    from ..session import scoped_conf
+    from .stateful import drain_conf
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(stream_state_partitions(spark))
-    )
-
-    raw = (
-        spark.readStream.schema(events_raw_schema(spark, stage_dir))
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(stage_dir)
-    )
-    stream = normalize_events_ts(raw).select("user_id", "value")
-    out = stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=UserProfileProcessor(),
-        outputStructType=PROFILE_OUTPUT_DDL,
-        outputMode="Update",
-        timeMode="None",
-    )
-    try:
+    # RocksDB state store: transformWithState's state variables need it
+    # (drain_conf docstring); width from the staged batch bytes
+    # (drain_partitions: 1 partition up to 64 KiB per batch, cores at most).
+    with scoped_conf(spark, drain_conf(spark, stage_dir, rocksdb=True)):
+        raw = (
+            spark.readStream.schema(events_raw_schema(spark, stage_dir))
+            .option("maxFilesPerTrigger", 1)
+            .format("parquet")
+            .load(stage_dir)
+        )
+        stream = normalize_events_ts(raw).select("user_id", "value")
+        out = stream.groupBy("user_id").transformWithStateInPandas(
+            statefulProcessor=UserProfileProcessor(),
+            outputStructType=PROFILE_OUTPUT_DDL,
+            outputMode="Update",
+            timeMode="None",
+        )
         q = (
             out.writeStream.format("memory")
             .queryName(query_name)
@@ -129,12 +112,6 @@ def run_profile_maintenance(spark, stage_dir: str, checkpoint_dir: str, query_na
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        if prior_provider is None:
-            spark.conf.unset(_PROVIDER_KEY)
-        else:
-            spark.conf.set(_PROVIDER_KEY, prior_provider)
     n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
     final = (
         spark.table(query_name)

@@ -89,47 +89,35 @@ def run_recent_events(spark, stage_dir: str, checkpoint_dir: str, query_name: st
     from ..sources.tables import normalize_events_ts
     from .events import events_raw_schema
 
-    _PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
-    prior_provider = spark.conf.get(_PROVIDER_KEY, None)
-    spark.conf.set(
-        _PROVIDER_KEY,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    # streaming-specific state-partition count (stateful.stream_state_partitions
-    # docstring: per-batch state-store commit fan-out is per-partition; A/B'd
-    # on ST4 at sf0.1 — 32 parts 6.1-6.9s, 8 parts 5.8-6.4s, rows identical)
-    from .stateful import stream_state_partitions
+    from ..session import scoped_conf
+    from .stateful import drain_conf
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(stream_state_partitions(spark))
-    )
-    raw = (
-        spark.readStream.schema(events_raw_schema(spark, stage_dir))
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(stage_dir)
-    )
-    # NULL ts/event_id would arrive as NaN in the pandas batch and crash
-    # the processor's int() coercion; the contract (shared with the batch
-    # twin and its oracle) excludes them up front.
-    stream = (
-        normalize_events_ts(raw)
-        .filter(F.col("ts").isNotNull() & F.col("event_id").isNotNull())
-        .select(
-            "user_id",
-            F.unix_micros("ts").alias("ts_us"),
-            "event_type",
-            "event_id",
+    with scoped_conf(spark, drain_conf(spark, stage_dir, rocksdb=True)):
+        raw = (
+            spark.readStream.schema(events_raw_schema(spark, stage_dir))
+            .option("maxFilesPerTrigger", 1)
+            .format("parquet")
+            .load(stage_dir)
         )
-    )
-    out = stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RecentEventsProcessor(),
-        outputStructType=RECENT_OUTPUT_DDL,
-        outputMode="Update",
-        timeMode="None",
-    )
-    try:
+        # NULL ts/event_id would arrive as NaN in the pandas batch and crash
+        # the processor's int() coercion; the contract (shared with the batch
+        # twin and its oracle) excludes them up front.
+        stream = (
+            normalize_events_ts(raw)
+            .filter(F.col("ts").isNotNull() & F.col("event_id").isNotNull())
+            .select(
+                "user_id",
+                F.unix_micros("ts").alias("ts_us"),
+                "event_type",
+                "event_id",
+            )
+        )
+        out = stream.groupBy("user_id").transformWithStateInPandas(
+            statefulProcessor=RecentEventsProcessor(),
+            outputStructType=RECENT_OUTPUT_DDL,
+            outputMode="Update",
+            timeMode="None",
+        )
         q = (
             out.writeStream.format("memory")
             .queryName(query_name)
@@ -139,12 +127,6 @@ def run_recent_events(spark, stage_dir: str, checkpoint_dir: str, query_name: st
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        if prior_provider is None:
-            spark.conf.unset(_PROVIDER_KEY)
-        else:
-            spark.conf.set(_PROVIDER_KEY, prior_provider)
     n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
     emissions = spark.table(query_name)
     # self-join of the memory view needs distinct attribute ids

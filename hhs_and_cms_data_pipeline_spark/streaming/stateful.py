@@ -27,29 +27,80 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..session import env_positive_int
+from ..session import env_positive_int, scoped_conf
 from ..sources.tables import normalize_events_ts
 from .events import events_raw_schema
 
-def stream_state_partitions(spark: SparkSession) -> int:
-    """State-store partition count for the stateful streaming drains
-    (VERDICT r12 item 3, guide §2.5/§5). Structured Streaming pins the
-    state-store partition count to ``spark.sql.shuffle.partitions`` at
-    FIRST batch for the checkpoint's lifetime, and every micro-batch then
-    pays one state-store commit (delta file + fsync) and one Python
-    worker round-trip PER PARTITION — overhead proportional to the
-    partition count, independent of data volume. Size it by state volume
-    per partition, not by core count: locally the per-user session state
-    is KB-scale, so cores/4 (floor 8) keeps every core busy on the
-    byte-proportional fold while quartering the per-batch commit fan-out.
-    Interleaved A/B at sf0.1 (3 reps each, warm): 32 partitions drained
-    in 6.1-6.9s, 8 partitions 5.8-6.4s, 4 partitions 6.7-8.7s (too few —
-    the pandas fold serializes); rows bit-identical across all three. On
-    a production cluster, override with $SPARK_GRAFT_STREAM_STATE_PARTITIONS
-    sized so each partition holds ~100MB-1GB of state."""
-    return env_positive_int("SPARK_GRAFT_STREAM_STATE_PARTITIONS") or max(
-        8, spark.sparkContext.defaultParallelism // 4
-    )
+
+# Per-batch input bytes one drain partition takes on. Matrix behind the
+# constant (largest staged file = one micro-batch, since every drain reads
+# with maxFilesPerTrigger=1; width = ceil(bytes / 64 KiB) capped at cores):
+#
+#   input      per-batch bytes   4 cores   8 cores   32 cores   (old rule)
+#   benchmark  13.8 KB           1         1         1          8
+#   sf0.01     60.7 KB           1         1         1          8
+#   sf0.1      535 KB            4         8         9          8
+#
+# Measured on a 4-core Xeon, applyInPandasWithState sessionizer drain:
+# benchmark data ran 4.8-5.9 s at width 8, 3.6-3.9 s at 4, 3.1-4.9 s at 1
+# (per-task fixed cost, ~80 ms state commit + ~400 ms Python round-trip,
+# dominates KB batches); sf0.1 ran 12.6-15.0 s at 8, 8.6-13.7 s at 4 and
+# 21.6-25.8 s at 1, so the width must grow with the batch. Rows were
+# hash-identical at widths 1, 2, 4 and 8 on every input.
+_DRAIN_BYTES_PER_PARTITION = 64 * 1024
+
+_ROCKSDB_PROVIDER = {
+    "spark.sql.streaming.stateStore.providerClass":
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+}
+
+
+def largest_file_bytes(stage_dir: str) -> int:
+    """Size of the largest data file directly under ``stage_dir``, skipping
+    the names the file source hides (leading ``_`` or ``.``); 0 when none."""
+    with os.scandir(stage_dir) as entries:
+        return max(
+            (
+                e.stat().st_size
+                for e in entries
+                if e.is_file() and not e.name.startswith(("_", "."))
+            ),
+            default=0,
+        )
+
+
+def drain_partitions(spark: SparkSession, stage_dir: str) -> int:
+    """Partition count for a bounded drain over the files in ``stage_dir``.
+
+    Structured Streaming pins the state-store partition count to
+    ``spark.sql.shuffle.partitions`` at the first batch for the
+    checkpoint's lifetime, and each micro-batch pays one state-store commit
+    and one Python-worker round-trip per partition; foreachBatch drains
+    schedule every batch job at that width too. The cost is per task, not
+    per byte, so the width follows the bytes of the largest micro-batch:
+    ``ceil(largest_file_bytes / 64 KiB)``, clamped to
+    ``[1, defaultParallelism]`` (matrix at ``_DRAIN_BYTES_PER_PARTITION``).
+    ``$SPARK_GRAFT_STREAM_STATE_PARTITIONS`` overrides it, e.g. on a
+    cluster sized so each partition holds ~100 MB-1 GB of state."""
+    override = env_positive_int("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
+    if override:
+        return override
+    width = -(-largest_file_bytes(stage_dir) // _DRAIN_BYTES_PER_PARTITION)
+    return max(1, min(width, spark.sparkContext.defaultParallelism))
+
+
+def drain_conf(spark: SparkSession, stage_dir: str, rocksdb: bool = False) -> dict[str, str]:
+    """Session confs for one drain over ``stage_dir``, applied through
+    ``session.scoped_conf`` around stream construction..awaitTermination.
+
+    ``rocksdb`` selects the RocksDB state-store provider, which the
+    transformWithState drains REQUIRE: they keep each state variable in its
+    own column family, and the default HDFSBackedStateStoreProvider rejects
+    multiple families. It is also the provider for state larger than
+    executor heap. Scoped so co-resident applyInPandasWithState queries keep
+    their session's provider."""
+    conf = {"spark.sql.shuffle.partitions": str(drain_partitions(spark, stage_dir))}
+    return {**conf, **_ROCKSDB_PROVIDER} if rocksdb else conf
 
 
 _GAP_US = 30 * 60 * 1_000_000  # 30 min in us; ts travels as int64 MICROS
@@ -156,46 +207,40 @@ def run_stateful_sessionize(
     """Run the stateful sessionizer over the staged files; returns the
     deduplicated final sessions and the number of micro-batches executed.
 
-    The drain runs under the streaming-specific state-partition count
-    (stream_state_partitions — rationale and A/B numbers there). The conf
-    is set/restored around the bounded availableNow drain: the state
-    store binds spark.sql.shuffle.partitions at first batch and pins it
-    in the checkpoint, so the window must cover start()..awaitTermination;
-    the single-use checkpoint means no later run can see a mismatched
-    pinned count."""
-    raw = (
-        spark.readStream.schema(events_raw_schema(spark, stage_dir))
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(stage_dir)
-    )
-    stream = (
-        normalize_events_ts(raw)
-        # null-ts rows are DROPPED to match the oracle's WHERE ts IS NOT
-        # NULL (_SQL_SESSIONIZED_CTES): without the filter, unix_micros
-        # yields NULL -> pandas NaN -> astype("int64") raises inside the
-        # Python worker, failing the whole stream where the batch twin
-        # succeeds. NULL-user rows are dropped too (oracle: WHERE user_id
-        # IS NOT NULL): a NULL grouping key reaches the stateful fold as a
-        # None-keyed pandas group and fails the non-null output-schema
-        # decode — adversarial-gate finding; a session of "unknown user"
-        # lumps unrelated traffic anyway.
-        .filter(F.col("ts").isNotNull() & F.col("user_id").isNotNull())
-        # int64 micros in-flight: Arrow-exact for the pandas state fold.
-        .select("user_id", F.unix_micros("ts").alias("ts"), "event_id")
-    )
-    sessions = stream.groupBy("user_id").applyInPandasWithState(
-        sessionize_with_state,
-        outputStructType=SESSION_OUTPUT_SCHEMA,
-        stateStructType=SESSION_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(stream_state_partitions(spark))
-    )
-    try:
+    The drain runs at ``drain_partitions`` (rationale and measurements
+    there), scoped over stream construction..awaitTermination: the state
+    store binds spark.sql.shuffle.partitions at first batch and pins it in
+    the checkpoint; the single-use checkpoint means no later run can see a
+    mismatched pinned count."""
+    with scoped_conf(spark, drain_conf(spark, stage_dir)):
+        raw = (
+            spark.readStream.schema(events_raw_schema(spark, stage_dir))
+            .option("maxFilesPerTrigger", 1)
+            .format("parquet")
+            .load(stage_dir)
+        )
+        stream = (
+            normalize_events_ts(raw)
+            # null-ts rows are DROPPED to match the oracle's WHERE ts IS NOT
+            # NULL (_SQL_SESSIONIZED_CTES): without the filter, unix_micros
+            # yields NULL -> pandas NaN -> astype("int64") raises inside the
+            # Python worker, failing the whole stream where the batch twin
+            # succeeds. NULL-user rows are dropped too (oracle: WHERE user_id
+            # IS NOT NULL): a NULL grouping key reaches the stateful fold as a
+            # None-keyed pandas group and fails the non-null output-schema
+            # decode — adversarial-gate finding; a session of "unknown user"
+            # lumps unrelated traffic anyway.
+            .filter(F.col("ts").isNotNull() & F.col("user_id").isNotNull())
+            # int64 micros in-flight: Arrow-exact for the pandas state fold.
+            .select("user_id", F.unix_micros("ts").alias("ts"), "event_id")
+        )
+        sessions = stream.groupBy("user_id").applyInPandasWithState(
+            sessionize_with_state,
+            outputStructType=SESSION_OUTPUT_SCHEMA,
+            stateStructType=SESSION_STATE_SCHEMA,
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
         q = (
             sessions.writeStream.format("memory")
             .queryName(query_name)
@@ -205,8 +250,6 @@ def run_stateful_sessionize(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
     # update-mode log: the last emission per (user, session) is the biggest —
     # sessions only grow — so max() collapses snapshots into finals.

@@ -106,42 +106,31 @@ def run_timer_sessions(spark, stage_dir: str, checkpoint_dir: str, query_name: s
     from ..sources.tables import normalize_events_ts
     from .events import events_raw_schema
 
-    from .stateful import stream_state_partitions
+    from ..session import scoped_conf
+    from .stateful import drain_conf
 
-    _PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
-    prior_provider = spark.conf.get(_PROVIDER_KEY, None)
-    spark.conf.set(
-        _PROVIDER_KEY,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    # streaming-specific state-partition count (stream_state_partitions
-    # docstring: per-batch commit fan-out is per-partition; A/B'd on ST4)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(stream_state_partitions(spark))
-    )
-    raw = (
-        spark.readStream.schema(events_raw_schema(spark, stage_dir))
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(stage_dir)
-    )
-    stream = (
-        normalize_events_ts(raw)
-        .withWatermark("ts", WATERMARK_DELAY)
-        .select(
-            "user_id",
-            (F.unix_micros("ts") / 1000).cast("long").alias("ts_ms"),
-            "ts",
+    with scoped_conf(spark, drain_conf(spark, stage_dir, rocksdb=True)):
+        raw = (
+            spark.readStream.schema(events_raw_schema(spark, stage_dir))
+            .option("maxFilesPerTrigger", 1)
+            .format("parquet")
+            .load(stage_dir)
         )
-    )
-    out = stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=TimerSessionProcessor(),
-        outputStructType=SESSION_OUTPUT_DDL,
-        outputMode="Append",
-        timeMode="EventTime",
-    )
-    try:
+        stream = (
+            normalize_events_ts(raw)
+            .withWatermark("ts", WATERMARK_DELAY)
+            .select(
+                "user_id",
+                (F.unix_micros("ts") / 1000).cast("long").alias("ts_ms"),
+                "ts",
+            )
+        )
+        out = stream.groupBy("user_id").transformWithStateInPandas(
+            statefulProcessor=TimerSessionProcessor(),
+            outputStructType=SESSION_OUTPUT_DDL,
+            outputMode="Append",
+            timeMode="EventTime",
+        )
         q = (
             out.writeStream.format("memory")
             .queryName(query_name)
@@ -151,11 +140,5 @@ def run_timer_sessions(spark, stage_dir: str, checkpoint_dir: str, query_name: s
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        if prior_provider is None:
-            spark.conf.unset(_PROVIDER_KEY)
-        else:
-            spark.conf.set(_PROVIDER_KEY, prior_provider)
     n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
     return spark.table(query_name), n_batches

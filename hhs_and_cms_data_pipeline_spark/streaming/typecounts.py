@@ -97,43 +97,31 @@ def run_type_counts(
     from ..sources.tables import normalize_events_ts
     from .events import events_raw_schema
 
-    _PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
-    prior_provider = spark.conf.get(_PROVIDER_KEY, None)
-    spark.conf.set(
-        _PROVIDER_KEY,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    # streaming-specific state-partition count (stateful.stream_state_partitions
-    # docstring: per-batch state-store commit fan-out is per-partition; A/B'd
-    # on ST4 at sf0.1 — 32 parts 6.1-6.9s, 8 parts 5.8-6.4s, rows identical)
-    from .stateful import stream_state_partitions
+    from ..session import scoped_conf
+    from .stateful import drain_conf
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(stream_state_partitions(spark))
-    )
-    raw = (
-        spark.readStream.schema(events_raw_schema(spark, stage_dir))
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(stage_dir)
-    )
-    # match the batch twin's NULL policy: n_seen counts TYPED events only
-    stream = (
-        normalize_events_ts(raw)
-        .filter(F.col("event_type").isNotNull())
-        .select("user_id", "event_type")
-    )
-    out = stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=TypeCountsProcessor(),
-        outputStructType=TYPECOUNT_OUTPUT_DDL,
-        outputMode="Update",
-        timeMode="None",
-        initialState=(
-            initial_state.groupBy("user_id") if initial_state is not None else None
-        ),
-    )
-    try:
+    with scoped_conf(spark, drain_conf(spark, stage_dir, rocksdb=True)):
+        raw = (
+            spark.readStream.schema(events_raw_schema(spark, stage_dir))
+            .option("maxFilesPerTrigger", 1)
+            .format("parquet")
+            .load(stage_dir)
+        )
+        # match the batch twin's NULL policy: n_seen counts TYPED events only
+        stream = (
+            normalize_events_ts(raw)
+            .filter(F.col("event_type").isNotNull())
+            .select("user_id", "event_type")
+        )
+        out = stream.groupBy("user_id").transformWithStateInPandas(
+            statefulProcessor=TypeCountsProcessor(),
+            outputStructType=TYPECOUNT_OUTPUT_DDL,
+            outputMode="Update",
+            timeMode="None",
+            initialState=(
+                initial_state.groupBy("user_id") if initial_state is not None else None
+            ),
+        )
         q = (
             out.writeStream.format("memory")
             .queryName(query_name)
@@ -143,12 +131,6 @@ def run_type_counts(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        if prior_provider is None:
-            spark.conf.unset(_PROVIDER_KEY)
-        else:
-            spark.conf.set(_PROVIDER_KEY, prior_provider)
     n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
     emissions = spark.table(query_name)
     last = (

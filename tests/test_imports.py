@@ -8,6 +8,7 @@ This test makes that class of breakage impossible to miss in any pytest
 invocation — it runs in well under a second and needs no SparkSession.
 """
 
+import ast
 import compileall
 import importlib
 import pkgutil
@@ -121,3 +122,31 @@ def test_entry_module_exposes_driver_contract():
     o = entry_mod.oracle_sql()
     assert len(q) >= 275
     assert set(o) <= set(q), "oracle_sql() keys must be a subset of queries()"
+
+
+def _direct_conf_writes(source: str) -> list[int]:
+    """Line numbers of ``<x>.conf.set(...)`` / ``<x>.conf.unset(...)`` calls."""
+    return [
+        node.lineno
+        for node in ast.walk(ast.parse(source))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("set", "unset")
+        and isinstance(node.func.value, ast.Attribute)
+        and node.func.value.attr == "conf"
+    ]
+
+
+def test_streaming_drains_set_confs_only_through_scoped_conf():
+    """Streaming drains change session confs only via session.scoped_conf,
+    which restores them on every exit path; a hand-rolled set/restore can
+    leak a drain's width or state-store provider into the shared session."""
+    assert _direct_conf_writes("spark.conf.set('k', 'v')\ns.conf.unset('k')") == [1, 2]
+    paths = sorted((PKG_ROOT / "streaming").rglob("*.py"))
+    paths.append(PKG_ROOT / "operators" / "streaming_batch.py")
+    offenders = {
+        str(p.relative_to(PKG_ROOT)): lines
+        for p in paths
+        if (lines := _direct_conf_writes(p.read_text()))
+    }
+    assert not offenders, f"direct spark.conf.set/unset (use scoped_conf): {offenders}"

@@ -468,13 +468,64 @@ def test_bad_cpus_env_names_variable(monkeypatch):
     assert S.default_parallelism() == 3
 
 
-def test_bad_stream_state_partitions_env_names_variable(spark, monkeypatch):
-    from hhs_and_cms_data_pipeline_spark.streaming.stateful import (
-        stream_state_partitions,
-    )
+def test_bad_stream_state_partitions_env_names_variable(spark, monkeypatch, tmp_path):
+    from hhs_and_cms_data_pipeline_spark.streaming.stateful import drain_partitions
 
     monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "0x10")
     with pytest.raises(ValueError, match=r"SPARK_GRAFT_STREAM_STATE_PARTITIONS.*'0x10'"):
-        stream_state_partitions(spark)
+        drain_partitions(spark, str(tmp_path))
     monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "5")
-    assert stream_state_partitions(spark) == 5
+    assert drain_partitions(spark, str(tmp_path)) == 5
+
+
+def _stage_file(stage, name: str, size: int) -> None:
+    # sparse: st_size is what the rule reads, no bytes need to be written
+    with open(stage / name, "wb") as f:
+        f.truncate(size)
+
+
+def test_drain_partitions_follow_largest_staged_file(spark, monkeypatch, tmp_path):
+    from hhs_and_cms_data_pipeline_spark.streaming.stateful import drain_partitions
+
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", raising=False)
+    cores = spark.sparkContext.defaultParallelism
+    assert drain_partitions(spark, str(tmp_path)) == 1  # nothing staged yet
+    _stage_file(tmp_path, "part-0.parquet", 14_000)
+    assert drain_partitions(spark, str(tmp_path)) == 1  # benchmark-sized batch
+    # the largest file sets the width; names the file source hides do not
+    _stage_file(tmp_path, "part-1.parquet", 130_000)
+    _stage_file(tmp_path, "_metadata", 10**9)
+    _stage_file(tmp_path, ".part-1.parquet.crc", 10**9)
+    assert drain_partitions(spark, str(tmp_path)) == min(2, cores)
+    _stage_file(tmp_path, "part-2.parquet", 10**9)
+    assert drain_partitions(spark, str(tmp_path)) == cores  # capped
+
+
+def test_drain_partitions_env_override_wins(spark, monkeypatch, tmp_path):
+    from hhs_and_cms_data_pipeline_spark.streaming.stateful import drain_partitions
+
+    _stage_file(tmp_path, "part-0.parquet", 10**9)
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "5")
+    assert drain_partitions(spark, str(tmp_path)) == 5
+    (tmp_path / "part-0.parquet").unlink()
+    _stage_file(tmp_path, "part-0.parquet", 14_000)
+    assert drain_partitions(spark, str(tmp_path)) == 5
+
+
+def test_scoped_conf_restores_prior_values_and_unsets_new_keys(spark):
+    shuffle, probe = "spark.sql.shuffle.partitions", "spark.graft.test.scopedProbe"
+    prior = spark.conf.get(shuffle)
+    assert spark.conf.get(probe, None) is None
+    with S.scoped_conf(spark, {shuffle: "3", probe: "on"}):
+        assert (spark.conf.get(shuffle), spark.conf.get(probe)) == ("3", "on")
+    assert (spark.conf.get(shuffle), spark.conf.get(probe, None)) == (prior, None)
+
+    spark.conf.set(probe, "before")
+    try:
+        with pytest.raises(RuntimeError, match="inside"):
+            with S.scoped_conf(spark, {shuffle: "3", probe: None}):
+                assert spark.conf.get(probe, None) is None  # None unsets
+                raise RuntimeError("inside")
+        assert (spark.conf.get(shuffle), spark.conf.get(probe)) == (prior, "before")
+    finally:
+        spark.conf.unset(probe)

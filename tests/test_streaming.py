@@ -3,6 +3,10 @@ upsert sink is idempotent across restarts (SURVEY §2.10)."""
 
 from __future__ import annotations
 
+import time
+
+import pytest
+
 from hhs_and_cms_data_pipeline_spark.streaming.events import (
     read_events_stream,
     run_available_now,
@@ -1231,3 +1235,98 @@ def test_daily_count_merge_replay_guard_and_additive_identity(spark, tmp_path):
         ("click", "2024-01-02"): 1,
         ("purchase", "2024-01-02"): 1,
     }
+
+
+_SHUFFLE = "spark.sql.shuffle.partitions"
+_PROVIDER = "spark.sql.streaming.stateStore.providerClass"
+
+
+def test_drain_confs_restored_when_stream_construction_fails(spark, tmp_path, monkeypatch):
+    """A failure while building the stream must not leak the drain's width or
+    state-store provider into the shared session: both go back to their
+    prior value (shuffle partitions) or back to unset (provider)."""
+    from hhs_and_cms_data_pipeline_spark.operators.streaming_batch import _run_drain
+    from hhs_and_cms_data_pipeline_spark.streaming import events
+    from hhs_and_cms_data_pipeline_spark.streaming.profile import (
+        run_profile_maintenance,
+    )
+
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "3")
+    seen = []
+
+    def failing_construction(spark_, *_args):
+        seen.append((spark_.conf.get(_SHUFFLE), spark_.conf.get(_PROVIDER, None)))
+        raise RuntimeError("injected stream construction failure")
+
+    monkeypatch.setattr(events, "events_raw_schema", failing_construction)
+    prior = spark.conf.get(_SHUFFLE)
+    assert spark.conf.get(_PROVIDER, None) is None
+    spark.conf.set(_SHUFFLE, "7")
+    try:
+        with pytest.raises(RuntimeError, match="injected"):
+            run_profile_maintenance(
+                spark, str(tmp_path), str(tmp_path / "ckpt"), "t_failed_profile"
+            )
+        with pytest.raises(RuntimeError, match="injected"):
+            _run_drain(spark, str(tmp_path), lambda: failing_construction(spark))
+        after = (spark.conf.get(_SHUFFLE), spark.conf.get(_PROVIDER, None))
+    finally:
+        spark.conf.set(_SHUFFLE, prior)
+    # the failure really happened inside each drain's conf scope ...
+    assert seen[0][0] == "3" and seen[0][1].endswith("RocksDBStateStoreProvider")
+    assert seen[1] == ("3", None)
+    # ... and left nothing behind
+    assert after == ("7", None)
+
+
+def test_stateful_sessionize_rows_invariant_to_drain_width(spark, tmp_path, monkeypatch):
+    """The derived width (1 for KB-scale batches) and a forced width of 8
+    drain to identical rows, and each query's progress reports the width
+    its state store actually ran at."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from hhs_and_cms_data_pipeline_spark.streaming.stateful import (
+        drain_partitions,
+        run_stateful_sessionize,
+        stage_chronological_files,
+    )
+
+    class StateWidths(StreamingQueryListener):
+        def __init__(self):
+            self.by_query: dict[str, set[int]] = {}
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            p = event.progress
+            if p.stateOperators:
+                self.by_query.setdefault(p.name, set()).add(
+                    p.stateOperators[0].numShufflePartitions
+                )
+
+        def onQueryTerminated(self, event):
+            pass
+
+    stage = stage_chronological_files(spark, SF_SMOKE, str(tmp_path / "stage"))
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", raising=False)
+    derived = drain_partitions(spark, stage)
+    assert derived == 1, "KB-scale micro-batches should drain at width 1"
+
+    listener = StateWidths()
+    spark.streams.addListener(listener)
+    try:
+        rows = {}
+        for width in (None, 8):
+            if width is not None:
+                monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", str(width))
+            name = f"t_sessions_w{width or derived}"
+            final, _ = run_stateful_sessionize(spark, stage, str(tmp_path / name), name)
+            rows[width or derived] = sorted(tuple(r) for r in final.collect())
+        deadline = time.monotonic() + 60  # listener events arrive asynchronously
+        while len(listener.by_query) < 2 and time.monotonic() < deadline:
+            time.sleep(0.2)
+    finally:
+        spark.streams.removeListener(listener)
+    assert listener.by_query == {"t_sessions_w1": {1}, "t_sessions_w8": {8}}
+    assert rows[1] == rows[8] and rows[1]
